@@ -585,6 +585,22 @@ def _band_geometry(num_hashes: int, bands: int) -> int:
     return num_hashes // bands
 
 
+def _hot_buckets(
+    frame: DataFrame, max_width: int, keys: tuple[str, ...]
+) -> DataFrame:
+    """Join-key buckets of ``frame`` wider than ``max_width``: a
+    map-side-combined groupBy count.  The list is tiny by construction
+    (at most total_rows/cap buckets can exceed the cap — usually none),
+    so it always broadcasts."""
+    key_cols = list(keys)
+    return (
+        frame.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("_w"))
+        .filter(F.col("_w") > max_width)
+        .select(*key_cols)
+    )
+
+
 def _drop_hot_buckets(
     banded: DataFrame,
     max_band_width: int,
@@ -592,23 +608,80 @@ def _drop_hot_buckets(
     keys: tuple[str, ...] = ("_band", "_bh"),
 ) -> DataFrame:
     """Remove rows of join-key buckets wider than ``max_band_width``
-    via a map-side-combined groupBy count and a broadcast anti-join.
-    The hot list is tiny by construction (only buckets with > cap rows
-    can appear, so there are at most total_rows/cap of them — usually
-    zero), which keeps the broadcast bounded and makes the no-hot-bucket
-    case nearly free."""
-    key_cols = list(keys)
-    hot = (
-        banded.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("_w"))
-        .filter(F.col("_w") > max_band_width)
-        .select(*key_cols)
-    )
-    return banded.join(F.broadcast(hot), key_cols, "left_anti")
+    via a broadcast anti-join against :func:`_hot_buckets`, which
+    keeps the no-hot-bucket case nearly free."""
+    hot = _hot_buckets(banded, max_band_width, keys)
+    return banded.join(F.broadcast(hot), list(keys), "left_anti")
+
+
+# ------------------------------------------------------------ pair cores
+#
+# Each similarity family has ONE pair core ``_<family>_pairs(left,
+# right=None, ...)``.  With ``right=None`` it is the batch self-join of
+# ``left``: pairs (id_a < id_b), and a hot-bucket cap applies to the
+# one frame.  With a ``right`` frame it is the incremental probe of a
+# NEW batch (left) against an EXISTING corpus (right): (new_id,
+# existing_id) pairs, the corpus never pairs with itself (each batch
+# pays O(new × collisions); at 100 TB the existing side's frame is a
+# table persisted once and re-joined per batch), and the cap applies
+# to the existing side, whose boilerplate hazard grows with the
+# corpus.  The public self-join and ``*_against`` operators are thin
+# callers, so banding, capping and verification live in one place.
+
+def _pair_names(right: DataFrame | None) -> tuple[str, str]:
+    """Output id columns of a pair core."""
+    return ("id_a", "id_b") if right is None else ("new_id", "existing_id")
+
+
+def _bucket_join(
+    left: DataFrame,
+    right: DataFrame | None,
+    keys: tuple[str, ...],
+    max_width: int | None = None,
+) -> DataFrame:
+    """Join a pair core's keyed (_id, *keys, ...) frames as "x" (left)
+    and "y" (right) on equal ``keys`` — the self-join of ``left``, with
+    id order (each unordered pair once), when ``right`` is None.
+    Buckets wider than ``max_width`` drop from the right side, which
+    for the self-join is the one frame."""
+    other = left if right is None else right
+    if max_width is not None:
+        other = _drop_hot_buckets(other, max_width, keys=keys)
+    on = [F.col(f"x.{k}") == F.col(f"y.{k}") for k in keys]
+    if right is None:
+        left = other
+        on.append(F.col("x._id") < F.col("y._id"))
+    return left.alias("x").join(other.alias("y"), on=on)
+
+
+def _per_side(
+    pairs: DataFrame,
+    ids: tuple[str, str],
+    sides: tuple[DataFrame, DataFrame],
+    value: Column,
+    names: tuple[str, str],
+) -> DataFrame:
+    """Attach one per-doc ``value`` of each side's (_id, ...) frame to
+    ``pairs``: the left side's as ``names[0]`` on ``ids[0]``, the right
+    side's as ``names[1]`` on ``ids[1]``."""
+    for i, side, name in zip(ids, sides, names):
+        pairs = pairs.join(
+            side.select(F.col("_id").alias(i), value.alias(name)), i
+        )
+    return pairs
+
+
+def _sides(build, left: DataFrame, right: DataFrame | None):
+    """``build`` applied to both sides of a pair core — once, and
+    shared, for the self-join.  The left side builds first (eager
+    checkpoints keep the new-then-existing order)."""
+    built = build(left)
+    return built, (built if right is None else build(right))
 
 
 def _band_candidates(
-    sig_df: DataFrame,
+    sig: DataFrame,
+    right: DataFrame | None = None,
     *,
     bands: int,
     rows: int,
@@ -616,9 +689,9 @@ def _band_candidates(
     hash_family: str = "xxhash64",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """Candidate (id_a < id_b) pairs: docs sharing any band hash.
-    ``sig_df`` must have columns (_id, _sig).  The self-join key is
-    (band index, band hash) — shuffle cost is O(candidates), not O(n²).
+    """Distinct candidate pairs of (_id, _sig) frames: docs sharing any
+    band hash.  The join key is (band index, band hash) — shuffle cost
+    is O(candidates), not O(n²).
 
     ``max_band_width`` caps the boilerplate-band skew hazard: a band
     bucket shared by w docs emits w² pairs in ONE join task, so a
@@ -627,48 +700,118 @@ def _band_candidates(
     join.  The cap is pay-as-you-go: over-cap buckets are found with a
     map-side-combined groupBy count (shuffle volume = distinct buckets,
     not rows) and removed with a BROADCAST anti-join — when no bucket
-    is hot, the hot list is empty and the cap costs one cheap aggregate
-    pass over the (already localCheckpoint-materialized) signatures
-    instead of the former sort-based count-window over every banded
-    row.  The hot bucket's count is O(w), not the O(w²) its join would
-    pay; the hot list is bounded by construction (≤ rows/cap buckets
-    can exceed the cap), so the broadcast never grows.  Candidates lost
-    are only pairs whose SOLE agreeing band is the boilerplate one —
-    genuinely similar docs agree on other bands too; with b bands the
-    chance a true near-dup pair survives in no other band is
-    (1-s^r)^(b-1), negligible at the default shapes."""
-    banded = sig_df.filter(F.col("_sig").isNotNull()).select(
-        "_id",
-        F.posexplode(
-            _band_hashes(
-                F.col("_sig"), bands=bands, rows=rows,
-                hash_family=hash_family,
-            )
-        ).alias("_band", "_bh"),
-    )
-    # Materialize the banded frame once: it is referenced by BOTH sides
-    # of the self-join and (with a cap) by the hot-bucket count, and
-    # Spark does not share subtrees across join sides — uncheckpointed,
-    # the band-hash projection + explode ran up to 4x per execution
-    # (x side, y side, and once per side's hot-bucket anti-join input).
-    # The stored rows are (_id, int, long) — smaller than the signature
-    # arrays the subtree would otherwise re-read — so this also holds at
-    # scale (same MEMORY_AND_DISK semantics as the signature checkpoint).
-    banded = _cut_lineage(banded, checkpoint_dir)
-    if max_band_width is not None:
-        banded = _drop_hot_buckets(banded, max_band_width)
-    return (
-        banded.alias("x")
-        .join(
-            banded.alias("y"),
-            on=[
-                F.col("x._band") == F.col("y._band"),
-                F.col("x._bh") == F.col("y._bh"),
-                F.col("x._id") < F.col("y._id"),
-            ],
+    is hot, the cap costs one cheap aggregate pass over the
+    materialized band frame.  The hot bucket's count is O(w), not the
+    O(w²) its join would pay.  Candidates lost are only pairs whose
+    SOLE agreeing band is the boilerplate one — genuinely similar docs
+    agree on other bands too; with b bands the chance a true near-dup
+    pair survives in no other band is (1-s^r)^(b-1), negligible at the
+    default shapes."""
+
+    def _banded(s: DataFrame) -> DataFrame:
+        # NULL signatures (shingle-less docs) never band
+        return s.filter(F.col("_sig").isNotNull()).select(
+            "_id",
+            F.posexplode(
+                _band_hashes(
+                    F.col("_sig"), bands=bands, rows=rows,
+                    hash_family=hash_family,
+                )
+            ).alias("_band", "_bh"),
         )
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"))
+
+    a, b = _pair_names(right)
+    left = _banded(sig)
+    if right is None:
+        # Materialize the banded frame once: it is referenced by BOTH
+        # sides of the self-join and (with a cap) by the hot-bucket
+        # count, and Spark does not share subtrees across join sides —
+        # uncheckpointed, the band-hash projection + explode ran up to
+        # 4x per execution.  The stored rows are (_id, int, long) —
+        # smaller than the signature arrays the subtree would re-read.
+        left = _cut_lineage(left, checkpoint_dir)
+    else:
+        right = _banded(right)
+        if max_band_width is not None:
+            # the hot-bucket count and the anti-join each read the
+            # existing side's band frame — cut it so the projection +
+            # explode runs once; uncapped it is read once, uncut
+            right = _cut_lineage(right, checkpoint_dir)
+    return (
+        _bucket_join(left, right, ("_band", "_bh"), max_band_width)
+        .select(F.col("x._id").alias(a), F.col("y._id").alias(b))
         .distinct()
+    )
+
+
+def _minhash_sigs(
+    df: DataFrame,
+    *,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """(_id, _sig) minhash signatures of ``df``'s 3-gram shingle sets:
+    the vectorized :func:`_minhash_sig_frame` scan for xxhash64, the
+    expression form for md5."""
+    gh = spread(df).select(
+        F.col(id_col).alias("_id"),
+        _gram_hashes(
+            token_ngrams(F.col(text_col)), hash_family=hash_family
+        ).alias("_gh"),
+    )
+    if hash_family == "md5":
+        return gh.select(
+            "_id",
+            _signature_from_hashes(
+                F.col("_gh"), num_hashes=num_hashes, hash_family=hash_family
+            ).alias("_sig"),
+        )
+    return _minhash_sig_frame(gh, num_hashes=num_hashes)
+
+
+def _est_jaccard(num_hashes: int) -> Column:
+    """Estimated Jaccard of signature columns _sa, _sb: the fraction of
+    agreeing minhash slots."""
+    return (
+        F.size(
+            F.filter(
+                F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
+                lambda eq: eq,
+            )
+        ).cast("double")
+        / F.lit(float(num_hashes))
+    )
+
+
+def _minhash_pairs(
+    sig: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_band_width: int | None,
+    hash_family: str = "xxhash64",
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """MinHash-LSH pair core over (_id, _sig) frames: band candidates
+    (:func:`_band_candidates`), verified by estimated Jaccard = the
+    fraction of agreeing minhashes ≥ ``threshold``."""
+    cand = _band_candidates(
+        sig, right, bands=bands, rows=_band_geometry(num_hashes, bands),
+        max_band_width=max_band_width, hash_family=hash_family,
+        checkpoint_dir=checkpoint_dir,
+    )
+    a, b = _pair_names(right)
+    return (
+        _per_side(
+            cand, (a, b), (sig, sig if right is None else right),
+            F.col("_sig"), ("_sa", "_sb"),
+        )
+        .select(a, b, _est_jaccard(num_hashes).alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= threshold)
     )
 
 
@@ -693,49 +836,19 @@ def minhash_lsh_pairs(
     ``max_band_width`` drops boilerplate band buckets before the
     self-join (see :func:`_band_candidates`); None disables the cap.
     """
-    rows = _band_geometry(num_hashes, bands)
-    gh = spread(df).select(
-        F.col(id_col).alias("_id"),
-        _gram_hashes(
-            token_ngrams(F.col(text_col)), hash_family=hash_family
-        ).alias("_gh"),
+    _band_geometry(num_hashes, bands)  # fail before the eager signatures
+    sig = _cut_lineage(
+        _minhash_sigs(
+            df, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+            hash_family=hash_family,
+        ),
+        checkpoint_dir,
     )
-    if hash_family == "md5":
-        # two-step projection kept for plan readability; correctness-
-        # wise _signature_from_hashes binds its input itself (r6)
-        sig = gh.select(
-            "_id",
-            _signature_from_hashes(
-                F.col("_gh"), num_hashes=num_hashes, hash_family=hash_family
-            ).alias("_sig"),
-        )
-    else:
-        sig = _minhash_sig_frame(gh, num_hashes=num_hashes)
-    sig = _cut_lineage(sig, checkpoint_dir)
-
-    cand = _band_candidates(
-        sig, bands=bands, rows=rows, max_band_width=max_band_width,
-        hash_family=hash_family, checkpoint_dir=checkpoint_dir,
+    return _minhash_pairs(
+        sig, num_hashes=num_hashes, bands=bands, threshold=threshold,
+        max_band_width=max_band_width, hash_family=hash_family,
+        checkpoint_dir=checkpoint_dir,
     )
-    verified = (
-        cand.join(sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("_sa")), "id_a")
-        .join(sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("_sb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, b: a == b),
-                        lambda eq: eq,
-                    )
-                ).cast("double")
-                / F.lit(float(num_hashes))
-            ).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    return verified
 
 
 def minhash_lsh_pairs_against(
@@ -763,116 +876,21 @@ def minhash_lsh_pairs_against(
     applies to the EXISTING side (the boilerplate hazard grows with
     corpus size).  Output: (new_id, existing_id, est_jaccard ≥ τ).
     """
-    rows = _band_geometry(num_hashes, bands)
+    _band_geometry(num_hashes, bands)  # fail before the eager signatures
 
-    def _sigs(df: DataFrame) -> DataFrame:
-        gh = spread(df).select(
-            F.col(id_col).alias("_id"),
-            _gram_hashes(
-                token_ngrams(F.col(text_col)), hash_family=hash_family
-            ).alias("_gh"),
-        )
-        if hash_family == "md5":
-            return gh.select(
-                "_id",
-                _signature_from_hashes(
-                    F.col("_gh"),
-                    num_hashes=num_hashes,
-                    hash_family=hash_family,
-                ).alias("_sig"),
-            )
-        return _minhash_sig_frame(gh, num_hashes=num_hashes)
-
-    sig_new = _cut_lineage(_sigs(new), checkpoint_dir)
-    sig_old = _cut_lineage(_sigs(existing), checkpoint_dir)
-    return _cross_pairs_from_signatures(
-        sig_new,
-        sig_old,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        max_band_width=max_band_width,
-        hash_family=hash_family,
-        checkpoint_dir=checkpoint_dir,
-    )
-
-
-def _cross_pairs_from_signatures(
-    sig_new: DataFrame,
-    sig_old: DataFrame,
-    *,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    max_band_width: int | None,
-    hash_family: str = "xxhash64",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Shared new × existing tail of the incremental near-dup gate:
-    band join on (_band, _bh) → distinct candidates → signature-match
-    estimate ≥ τ.  Both inputs are (_id, _sig) frames; the width cap
-    applies to the EXISTING side (the boilerplate hazard grows with
-    corpus size)."""
-    rows = _band_geometry(num_hashes, bands)
-
-    def _banded(sig_df: DataFrame) -> DataFrame:
-        # NULL signatures (shingle-less docs) never band
-        return sig_df.filter(F.col("_sig").isNotNull()).select(
-            "_id",
-            F.posexplode(
-                _band_hashes(
-                    F.col("_sig"), bands=bands, rows=rows,
-                    hash_family=hash_family,
-                )
-            ).alias("_band", "_bh"),
-        )
-
-    bn, bo = _banded(sig_new), _banded(sig_old)
-    if max_band_width is not None:
-        # the hot-bucket count reads bo once and the anti-join/probe
-        # side reads it again — materialize the EXISTING corpus's band
-        # frame so its band-hash projection + explode runs once (the
-        # same fix _band_candidates got for the self-join); with no
-        # cap bo is consumed exactly once and needs no cut
-        bo = _cut_lineage(bo, checkpoint_dir)
-        bo = _drop_hot_buckets(bo, max_band_width)
-    cand = (
-        bn.alias("x")
-        .join(
-            bo.alias("y"),
-            on=[
-                F.col("x._band") == F.col("y._band"),
-                F.col("x._bh") == F.col("y._bh"),
-            ],
-        )
-        .select(
-            F.col("x._id").alias("new_id"),
-            F.col("y._id").alias("existing_id"),
-        )
-        .distinct()
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    return (
-        cand.join(
-            sig_new.select(F.col("_id").alias("new_id"), F.col("_sig").alias("_sa")),
-            "new_id",
-        )
-        .join(
-            sig_old.select(
-                F.col("_id").alias("existing_id"), F.col("_sig").alias("_sb")
+    def _sigs(d: DataFrame) -> DataFrame:
+        return _cut_lineage(
+            _minhash_sigs(
+                d, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+                hash_family=hash_family,
             ),
-            "existing_id",
+            checkpoint_dir,
         )
-        .select("new_id", "existing_id", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+
+    return _minhash_pairs(
+        *_sides(_sigs, new, existing), num_hashes=num_hashes, bands=bands,
+        threshold=threshold, max_band_width=max_band_width,
+        hash_family=hash_family, checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -899,14 +917,8 @@ def near_dedup_against(
     bucket was dropped), or tighten it for heavily boilerplated
     corpora."""
     flagged = minhash_lsh_pairs_against(
-        new,
-        existing,
-        text_col=text_col,
-        id_col=id_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
+        new, existing, text_col=text_col, id_col=id_col, num_hashes=num_hashes,
+        bands=bands, threshold=threshold, checkpoint_dir=checkpoint_dir,
         max_band_width=max_band_width,
     ).select(F.col("new_id").alias(id_col)).distinct()
     return new.select(id_col).join(flagged, on=id_col, how="left_anti")
@@ -992,16 +1004,9 @@ def lsh_verified_jaccard_pairs(
     # Margin = 4 std devs of the estimator (sqrt(τ(1-τ)/k) ≤ 0.5/√k),
     # so dropping a true pair at the threshold is negligible.
     margin = 2.0 / (num_hashes ** 0.5)
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("_sa"), F.col("_sb"), lambda a, b: a == b),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
+    screened = joined.filter(
+        _est_jaccard(num_hashes) >= F.lit(threshold - margin)
     )
-    screened = joined.filter(est >= F.lit(threshold - margin))
     inter = F.size(F.array_intersect(F.col("_ga"), F.col("_gb"))).cast("double")
     union = (F.col("_na") + F.col("_nb")).cast("double") - inter
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -1143,6 +1148,24 @@ def simhash(
     )
 
 
+def _simhash_sigs(
+    df: DataFrame, *, text_col: str, id_col: str, hash_family: str = "xxhash64"
+) -> DataFrame:
+    """(_id, _sh) SimHash fingerprints of ``df``.  Two-step projection:
+    the packed fingerprint references the token-hash array once per
+    bit, and higher-order lambdas are opaque to Catalyst CSE —
+    materialize the hashes first or every bit would re-tokenize and
+    re-hash the text."""
+    return (
+        spread(df)
+        .select(
+            F.col(id_col).alias("_id"),
+            _token_hashes(F.col(text_col), hash_family=hash_family).alias("_th"),
+        )
+        .select("_id", _simhash_from_hashes(F.col("_th")).alias("_sh"))
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     *,
@@ -1167,22 +1190,13 @@ def simhash_pairs(
     completeness for pairs whose only agreeing chunk was capped — at
     that scale, raise the chunk width (more bits) first and cap as the
     backstop."""
-    # Two-step projection: the packed fingerprint references the token-
-    # hash array once per bit, and higher-order lambdas are opaque to
-    # Catalyst CSE — materialize the hashes first or every bit would
-    # re-tokenize and re-hash the text.
-    sig = (
-        spread(df)
-        .select(
-            F.col(id_col).alias("_id"),
-            _token_hashes(
-                F.col(text_col), hash_family=hash_family
-            ).alias("_th"),
-        )
-        .select("_id", _simhash_from_hashes(F.col("_th")).alias("_sh"))
+    sig = _cut_lineage(
+        _simhash_sigs(
+            df, text_col=text_col, id_col=id_col, hash_family=hash_family
+        ),
+        checkpoint_dir,
     )
-    sig = _cut_lineage(sig, checkpoint_dir)
-    return hamming_pairs(
+    return _hamming_pairs(
         sig, max_hamming=max_hamming, max_chunk_width=max_chunk_width
     )
 
@@ -1199,33 +1213,8 @@ def hamming_pairs(
     exact hamming ≤ ``max_hamming``.  Exact and complete while
     ``max_hamming ≤ n_chunks - 1`` (pigeonhole over the 4×16-bit
     banding ⇒ ≤ 3) and the chunk cap is off."""
-    chunks = _simhash_chunks(sig)
-    if max_chunk_width is not None:
-        chunks = _drop_hot_buckets(
-            chunks, max_chunk_width, keys=("_chunk", "_cv")
-        )
-    cand = (
-        chunks.alias("x")
-        .join(
-            chunks.alias("y"),
-            on=[
-                F.col("x._chunk") == F.col("y._chunk"),
-                F.col("x._cv") == F.col("y._cv"),
-                F.col("x._id") < F.col("y._id"),
-            ],
-        )
-        .select(
-            F.col("x._id").alias("id_a"),
-            F.col("y._id").alias("id_b"),
-            F.col("x._sh").alias("_sa"),
-            F.col("y._sh").alias("_sb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    return (
-        cand.select("id_a", "id_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(
+        sig, max_hamming=max_hamming, max_chunk_width=max_chunk_width
     )
 
 
@@ -1249,6 +1238,38 @@ def _simhash_chunks(sig: DataFrame) -> DataFrame:
     )
 
 
+def _hamming_pairs(
+    sig: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    max_hamming: int,
+    max_chunk_width: int | None,
+) -> DataFrame:
+    """Hamming pair core over (_id, _sh) frames: chunk-band, join on
+    (chunk, value), verify exact hamming ≤ ``max_hamming``."""
+    a, b = _pair_names(right)
+    cand = (
+        _bucket_join(
+            _simhash_chunks(sig),
+            None if right is None else _simhash_chunks(right),
+            ("_chunk", "_cv"),
+            max_chunk_width,
+        )
+        .select(
+            F.col("x._id").alias(a),
+            F.col("y._id").alias(b),
+            F.col("x._sh").alias("_sa"),
+            F.col("y._sh").alias("_sb"),
+        )
+        .distinct()
+    )
+    hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
+    return (
+        cand.select(a, b, hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_pairs_against(
     new: DataFrame,
     existing: DataFrame,
@@ -1262,73 +1283,23 @@ def simhash_pairs_against(
 ) -> DataFrame:
     """Incremental cross-corpus SimHash near-dup: (new_id, existing_id,
     hamming ≤ ``max_hamming``) pairs between a NEW batch and an EXISTING
-    corpus — the hamming-side admission gate for corpora indexed by
-    SimHash (the minhash twin is :func:`minhash_lsh_pairs_against`).
+    corpus — the hamming-side admission gate, with the new × existing
+    contract of its minhash twin :func:`minhash_lsh_pairs_against`.
+    ``max_chunk_width`` caps the EXISTING side's chunk buckets; None
+    (default) keeps the pigeonhole guarantee of :func:`simhash_pairs`
+    exact and complete."""
 
-    Same 16-bit-chunk pigeonhole banding as :func:`simhash_pairs`, but
-    the chunk join is new × existing instead of a self-join: the
-    existing corpus never pairs against itself, so each crawl pays
-    O(new × collisions) — at 100 TB the existing side's chunk frame is
-    a table you persist once and re-join per batch.  ``max_chunk_width``
-    caps the EXISTING side's chunk buckets (the by-chance collision
-    hazard grows with corpus size); None (default) keeps the pigeonhole
-    guarantee exact and complete."""
-    def _sigs(df: DataFrame) -> DataFrame:
-        return (
-            spread(df)
-            .select(
-                F.col(id_col).alias("_id"),
-                _token_hashes(
-                    F.col(text_col), hash_family=hash_family
-                ).alias("_th"),
-            )
-            .select("_id", _simhash_from_hashes(F.col("_th")).alias("_sh"))
+    def _sigs(d: DataFrame) -> DataFrame:
+        return _cut_lineage(
+            _simhash_sigs(
+                d, text_col=text_col, id_col=id_col, hash_family=hash_family
+            ),
+            checkpoint_dir,
         )
 
-    sig_new = _cut_lineage(_sigs(new), checkpoint_dir)
-    sig_old = _cut_lineage(_sigs(existing), checkpoint_dir)
-    return _cross_hamming_pairs(
-        sig_new,
-        sig_old,
-        max_hamming=max_hamming,
+    return _hamming_pairs(
+        *_sides(_sigs, new, existing), max_hamming=max_hamming,
         max_chunk_width=max_chunk_width,
-    )
-
-
-def _cross_hamming_pairs(
-    sig_new: DataFrame,
-    sig_old: DataFrame,
-    *,
-    max_hamming: int,
-    max_chunk_width: int | None,
-) -> DataFrame:
-    """Shared new × existing tail for 64-bit hamming gates: chunk-band
-    both ``(_id, _sh)`` frames, join on (chunk, value) with the width
-    cap on the EXISTING side, verify exact hamming."""
-    cn, co = _simhash_chunks(sig_new), _simhash_chunks(sig_old)
-    if max_chunk_width is not None:
-        co = _drop_hot_buckets(co, max_chunk_width, keys=("_chunk", "_cv"))
-    cand = (
-        cn.alias("x")
-        .join(
-            co.alias("y"),
-            on=[
-                F.col("x._chunk") == F.col("y._chunk"),
-                F.col("x._cv") == F.col("y._cv"),
-            ],
-        )
-        .select(
-            F.col("x._id").alias("new_id"),
-            F.col("y._id").alias("existing_id"),
-            F.col("x._sh").alias("_sa"),
-            F.col("y._sh").alias("_sb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    return (
-        cand.select("new_id", "existing_id", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -1347,12 +1318,8 @@ def simhash_dedup_against(
     existing corpus (anti-join on the flagged id set — the corpus
     itself never shuffles).  Output: (id_col) of admitted new docs."""
     flagged = simhash_pairs_against(
-        new,
-        existing,
-        text_col=text_col,
-        id_col=id_col,
-        max_hamming=max_hamming,
-        checkpoint_dir=checkpoint_dir,
+        new, existing, text_col=text_col, id_col=id_col,
+        max_hamming=max_hamming, checkpoint_dir=checkpoint_dir,
         max_chunk_width=max_chunk_width,
     ).select(F.col("new_id").alias(id_col)).distinct()
     return new.select(id_col).join(flagged, on=id_col, how="left_anti")
@@ -1423,51 +1390,66 @@ def winnowing_containment_pairs(
     (``max_fp_width``) for fingerprints shared by half the corpus
     (licence headers).  Spark-side only (xxhash64): soundness is
     pytest-checked, not SQL-oracled."""
+    return _winnowing_pairs(
+        df, text_col=text_col, id_col=id_col, shingle=shingle, window=window,
+        min_shared=min_shared, max_fp_width=max_fp_width,
+        checkpoint_dir=checkpoint_dir, hash_family=hash_family,
+    )
+
+
+def _winnowing_pairs(
+    df: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    text_col: str,
+    id_col: str,
+    shingle: int,
+    window: int,
+    min_shared: int,
+    max_fp_width: int | None,
+    checkpoint_dir: str | None,
+    hash_family: str,
+) -> DataFrame:
+    """Winnowing-containment pair core: shared-fingerprint counts ≥
+    ``min_shared`` over a fingerprint-keyed join, normalized by the
+    smaller document's fingerprint count."""
     from sample_dms_s3_kinesis_spark.operators.text import (
         winnowed_fingerprints,
     )
 
-    fps = spread(df).select(
-        F.col(id_col).alias("_id"),
-        winnowed_fingerprints(
-            F.col(text_col), shingle=shingle, window=window,
-            hash_family=hash_family,
-        ).alias("_fps"),
-    )
-    fps = _cut_lineage(fps, checkpoint_dir)
-    sizes = fps.select("_id", F.size("_fps").alias("_nf"))
-    ex = fps.select("_id", F.explode("_fps").alias("_fp"))
-    if max_fp_width is not None:
-        ex = _drop_hot_buckets(ex, max_fp_width, keys=("_fp",))
+    def _fps(d: DataFrame) -> DataFrame:
+        return _cut_lineage(
+            spread(d).select(
+                F.col(id_col).alias("_id"),
+                winnowed_fingerprints(
+                    F.col(text_col), shingle=shingle, window=window,
+                    hash_family=hash_family,
+                ).alias("_fps"),
+            ),
+            checkpoint_dir,
+        )
+
+    def _exploded(f: DataFrame) -> DataFrame:
+        return f.select("_id", F.explode("_fps").alias("_fp"))
+
+    fl, fr = _sides(_fps, df, right)
+    a, b = _pair_names(right)
     pairs = (
-        ex.alias("x")
-        .join(
-            ex.alias("y"),
-            on=[
-                F.col("x._fp") == F.col("y._fp"),
-                F.col("x._id") < F.col("y._id"),
-            ],
+        _bucket_join(
+            _exploded(fl), None if right is None else _exploded(fr),
+            ("_fp",), max_fp_width,
         )
         # fingerprints are distinct within a doc, so each common
         # fingerprint contributes exactly one joined row per pair
-        .groupBy(
-            F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b")
-        )
+        .groupBy(F.col("x._id").alias(a), F.col("y._id").alias(b))
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )
     return (
-        pairs.join(
-            sizes.select(F.col("_id").alias("id_a"), F.col("_nf").alias("_na")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("_id").alias("id_b"), F.col("_nf").alias("_nb")),
-            "id_b",
-        )
+        _per_side(pairs, (a, b), (fl, fr), F.size("_fps"), ("_na", "_nb"))
         .select(
-            "id_a",
-            "id_b",
+            a,
+            b,
             "shared",
             F.round(
                 F.col("shared") / F.least(F.col("_na"), F.col("_nb")), 6
@@ -1489,66 +1471,15 @@ def embedding_near_dup_against(
 ) -> DataFrame:
     """Incremental cross-corpus embedding near-dup: (new_id,
     existing_id, cosine ≥ τ) pairs between a NEW batch and an EXISTING
-    corpus within a blocking key — the embedding-side admission gate,
-    completing the trio with :func:`minhash_lsh_pairs_against` (lexical)
-    and :func:`simhash_pairs_against` (hamming).
-
+    corpus within a blocking key — the embedding-side admission gate.
     The NEW batch is the build side (a crawl batch is small next to the
-    corpus): size-gated broadcast with the salted-shuffle fallback of
-    :func:`_block_pair_join`, so the existing corpus only streams
-    through the probe side and never self-pairs.  ``broadcast``
+    corpus), size-gated as in :func:`embedding_near_dup_pairs`, so the
+    existing corpus only streams through the probe side.  ``broadcast``
     True/False pins the strategy and skips the sizing count."""
-    build_rows = new.count() if broadcast is None else None
-
-    def _base(df: DataFrame) -> DataFrame:
-        # per-vector norm once per side — see embedding_near_dup_pairs
-        norm = F.sqrt(
-            F.aggregate(
-                F.transform(F.col("_v"), lambda x: x * x),
-                F.lit(0.0),
-                lambda s, v: s + v,
-            )
-        )
-        return spread(df).select(
-            F.col(id_col).alias("_id"),
-            F.col(block_col).alias("_blk"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        ).withColumn("_n", norm)
-
-    ex = _base(existing).select(
-        "_blk", F.col("_id").alias("existing_id"),
-        F.col("_v").alias("_ve"), F.col("_n").alias("_ne"),
-    )
-    nw = _base(new).select(
-        "_blk", F.col("_id").alias("new_id"),
-        F.col("_v").alias("_vn"), F.col("_n").alias("_nn"),
-    )
-    pairs = _block_pair_join(
-        ex,
-        nw,
-        build_rows,
-        probe_id="existing_id",
-        broadcast_rows=broadcast_rows,
+    return _embedding_pairs(
+        new, existing, vec_col=vec_col, id_col=id_col, block_col=block_col,
+        threshold=threshold, broadcast_rows=broadcast_rows,
         broadcast=broadcast,
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("_vn"), F.col("_ve"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # same NULL/NaN contract as cosine_similarity (see its docstring)
-    cos = _bind(
-        F.try_divide(dot, F.col("_nn") * F.col("_ne")),
-        lambda c: F.when(~F.isnan(c), c),
-    )
-    # raw-value filter (round only for output) — see ngram_jaccard_pairs
-    return (
-        pairs.select("new_id", "existing_id", cos.alias("_raw"))
-        .filter(F.col("_raw") >= threshold)
-        .select(
-            "new_id", "existing_id",
-            F.round(F.col("_raw"), 6).alias("cosine"),
-        )
     )
 
 
@@ -1567,13 +1498,8 @@ def embedding_dedup_against(
     NEW vectors whose cosine reaches ``threshold`` against nothing in
     the existing corpus.  Output: (id_col) of admitted new rows."""
     flagged = embedding_near_dup_against(
-        new,
-        existing,
-        vec_col=vec_col,
-        id_col=id_col,
-        block_col=block_col,
-        threshold=threshold,
-        broadcast_rows=broadcast_rows,
+        new, existing, vec_col=vec_col, id_col=id_col, block_col=block_col,
+        threshold=threshold, broadcast_rows=broadcast_rows,
         broadcast=broadcast,
     ).select(F.col("new_id").alias(id_col)).distinct()
     return new.select(id_col).join(flagged, on=id_col, how="left_anti")
@@ -1784,6 +1710,28 @@ def embedding_near_dup_pairs(
 
     ``broadcast`` True/False pins the pair-join strategy and skips the
     eager sizing ``count()``; None (default) size-gates."""
+    return _embedding_pairs(
+        df, vec_col=vec_col, id_col=id_col, block_col=block_col,
+        threshold=threshold, broadcast_rows=broadcast_rows,
+        broadcast=broadcast,
+    )
+
+
+def _embedding_pairs(
+    df: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    vec_col: str,
+    id_col: str,
+    block_col: str,
+    threshold: float,
+    broadcast_rows: int,
+    broadcast: bool | None,
+) -> DataFrame:
+    """Embedding-cosine pair core within a blocking key.  The left
+    frame sizes the build side — the one frame of the self-join, the
+    NEW batch of the probe (a crawl batch is small next to the corpus,
+    which then only streams through the probe side)."""
     build_rows = df.count() if broadcast is None else None
     # Per-VECTOR norm computed once per side, not once per pair: the
     # cosine's two norm folds are interpreted HOF passes, and inside
@@ -1797,24 +1745,36 @@ def embedding_near_dup_pairs(
             lambda s, v: s + v,
         )
     )
-    base = spread(df).select(
-        F.col(id_col).alias("_id"),
-        F.col(block_col).alias("_blk"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    ).withColumn("_n", norm)
-    a = base.select(
-        "_blk", F.col("_id").alias("id_a"),
+
+    def _base(d: DataFrame) -> DataFrame:
+        return spread(d).select(
+            F.col(id_col).alias("_id"),
+            F.col(block_col).alias("_blk"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        ).withColumn("_n", norm)
+
+    lbase, rbase = _sides(_base, df, right)
+    a, b = _pair_names(right)
+    left = lbase.select(
+        "_blk", F.col("_id").alias(a),
         F.col("_v").alias("_va"), F.col("_n").alias("_na"),
     )
-    b = base.select(
-        "_blk", F.col("_id").alias("id_b"),
+    other = rbase.select(
+        "_blk", F.col("_id").alias(b),
         F.col("_v").alias("_vb"), F.col("_n").alias("_nb"),
     )
     # Size-gated: broadcast a bounded build side, salted shuffle join
     # beyond it (see _block_pair_join).
-    pairs = _block_pair_join(
-        a, b, build_rows, broadcast_rows=broadcast_rows, broadcast=broadcast
-    ).filter(F.col("id_a") < F.col("id_b"))
+    if right is None:
+        pairs = _block_pair_join(
+            left, other, build_rows,
+            broadcast_rows=broadcast_rows, broadcast=broadcast,
+        ).filter(F.col(a) < F.col(b))
+    else:
+        pairs = _block_pair_join(
+            other, left, build_rows, probe_id=b,
+            broadcast_rows=broadcast_rows, broadcast=broadcast,
+        )
     dot = F.aggregate(
         F.zip_with(F.col("_va"), F.col("_vb"), lambda x, y: x * y),
         F.lit(0.0),
@@ -1827,9 +1787,9 @@ def embedding_near_dup_pairs(
     )
     # raw-value filter (round only for output) — see ngram_jaccard_pairs
     return (
-        pairs.select("id_a", "id_b", cos.alias("_raw"))
+        pairs.select(a, b, cos.alias("_raw"))
         .filter(F.col("_raw") >= threshold)
-        .select("id_a", "id_b", F.round(F.col("_raw"), 6).alias("cosine"))
+        .select(a, b, F.round(F.col("_raw"), 6).alias("cosine"))
     )
 
 
@@ -1850,7 +1810,7 @@ class MinhashIndex:
     so the index grows with the corpus it guards.
 
     Same banding/estimation code path as the recompute operators
-    (`_cross_pairs_from_signatures`), so gate decisions are identical
+    (`_minhash_pairs`), so gate decisions are identical
     — pytest pins exact equality with `minhash_lsh_pairs_against`.
     """
 
@@ -1874,13 +1834,8 @@ class MinhashIndex:
         self.text_col = text_col
 
     def _sigs(self, corpus: DataFrame) -> DataFrame:
-        return _minhash_sig_frame(
-            spread(corpus).select(
-                F.col(self.id_col).alias("_id"),
-                _gram_hashes(token_ngrams(F.col(self.text_col))).alias(
-                    "_gh"
-                ),
-            ),
+        return _minhash_sigs(
+            corpus, text_col=self.text_col, id_col=self.id_col,
             num_hashes=self.num_hashes,
         )
 
@@ -1916,15 +1871,10 @@ class MinhashIndex:
         """(new_id, existing_id, est_jaccard ≥ τ) — the new batch's
         near-dup matches into the indexed corpus, with only the batch
         paying signature computation."""
-        sig_new = _cut_lineage(self._sigs(new), checkpoint_dir)
-        return _cross_pairs_from_signatures(
-            sig_new,
-            self.signatures,
-            num_hashes=self.num_hashes,
-            bands=self.bands,
-            threshold=threshold,
-            max_band_width=max_band_width,
-            checkpoint_dir=checkpoint_dir,
+        return _minhash_pairs(
+            _cut_lineage(self._sigs(new), checkpoint_dir), self.signatures,
+            num_hashes=self.num_hashes, bands=self.bands, threshold=threshold,
+            max_band_width=max_band_width, checkpoint_dir=checkpoint_dir,
         )
 
     def admit(
@@ -2033,6 +1983,28 @@ def prefix_jaccard_pairs(
     only; the verification join touches candidate docs, not the
     corpus.  Output: (id_a < id_b, jaccard) rounded to 6.
     """
+    return _prefix_jaccard_pairs(
+        df, text_col=text_col, id_col=id_col, threshold=threshold,
+        shingle=shingle, broadcast_freq=broadcast_freq,
+    )
+
+
+def _prefix_jaccard_pairs(
+    df: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    shingle: int,
+    broadcast_freq: bool | None = None,
+) -> DataFrame:
+    """Prefix-filter Jaccard pair core (plan: see
+    :func:`prefix_jaccard_pairs`).  Prefix lemma requirement: BOTH
+    sides sort their tokens by the SAME global order, so document
+    frequencies count the one frame, or new ∪ existing (at 100 TB,
+    persist the existing side's frequency table and merge the batch's
+    counts instead of recounting)."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # set elements: single lowercased tokens (default) or the SAME
@@ -2044,49 +2016,59 @@ def prefix_jaccard_pairs(
         if shingle <= 1
         else token_ngrams(F.col(text_col), shingle)
     )
-    tok = (
-        spread(df)
-        .select(F.col(id_col).alias("_id"), F.explode(elems).alias("_tok"))
-        .filter(F.col("_tok") != "")
+
+    def _tok(d: DataFrame) -> DataFrame:
+        return (
+            spread(d)
+            .select(F.col(id_col).alias("_id"), F.explode(elems).alias("_tok"))
+            .filter(F.col("_tok") != "")
+        )
+
+    tl = _tok(df)
+    tr = None if right is None else _tok(right)
+    freq = (tl if tr is None else tl.unionByName(tr)).groupBy("_tok").agg(
+        F.count(F.lit(1)).alias("_df")
     )
-    freq = tok.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
     if broadcast_freq:
         freq = F.broadcast(freq)
-    ranked = tok.join(freq, on="_tok")
-    # per-doc rarity-sorted token array; struct sort = (_df asc, _tok asc)
-    per_doc = ranked.groupBy("_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("_df"), F.col("_tok")))
-        ).alias("_arr"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    # prefix length p = n - ceil(τ·n) + 1 (epsilon keeps a float
-    # rounding error from SHORTENING the prefix — longer is only cost,
-    # shorter loses pairs)
-    p = F.col("_n") - F.ceil(
-        F.col("_n") * F.lit(threshold) - F.lit(1e-9)
-    ).cast("int") + F.lit(1)
-    prefix = per_doc.select(
-        "_id",
-        "_n",
-        F.explode(
-            F.transform(F.slice("_arr", 1, p), lambda s: s["_tok"])
-        ).alias("_tok"),
-    )
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            on=[
-                F.col("a._tok") == F.col("b._tok"),
-                F.col("a._id") < F.col("b._id"),
-            ],
+
+    def _prefix(tok: DataFrame) -> tuple[DataFrame, DataFrame]:
+        # per-doc rarity-sorted token array; struct sort = (_df asc,
+        # _tok asc)
+        per_doc = tok.join(freq, on="_tok").groupBy("_id").agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("_df"), F.col("_tok")))
+            ).alias("_arr"),
+            F.count(F.lit(1)).alias("_n"),
         )
+        # prefix length p = n - ceil(τ·n) + 1 (epsilon keeps a float
+        # rounding error from SHORTENING the prefix — longer is only
+        # cost, shorter loses pairs)
+        p = F.col("_n") - F.ceil(
+            F.col("_n") * F.lit(threshold) - F.lit(1e-9)
+        ).cast("int") + F.lit(1)
+        prefix = per_doc.select(
+            "_id",
+            "_n",
+            F.explode(
+                F.transform(F.slice("_arr", 1, p), lambda s: s["_tok"])
+            ).alias("_tok"),
+        )
+        # the verification arrays reuse the rarity-sorted frame
+        arrs = per_doc.select(
+            "_id", F.transform("_arr", lambda s: s["_tok"]).alias("_toks")
+        )
+        return prefix, arrs
+
+    (pl, al), (pr, ar) = _sides(_prefix, tl, tr)
+    a, b = _pair_names(right)
+    cand = (
+        _bucket_join(pl, None if right is None else pr, ("_tok",))
         .select(
-            F.col("a._id").alias("id_a"),
-            F.col("a._n").alias("_na"),
-            F.col("b._id").alias("id_b"),
-            F.col("b._n").alias("_nb"),
+            F.col("x._id").alias(a),
+            F.col("x._n").alias("_na"),
+            F.col("y._id").alias(b),
+            F.col("y._n").alias("_nb"),
         )
         .distinct()
     )
@@ -2097,33 +2079,17 @@ def prefix_jaccard_pairs(
     # the synthetic tiny-vocab corpus, where 1.5% of ALL pairs qualify
     # and any exact join is output-bound; the gap widens on real
     # heavy-tailed vocabularies where rare-token prefixes make
-    # candidates sparse).  The arrays reuse the rarity-sorted frame
-    # already built for the prefixes.
-    arrs = per_doc.select(
-        "_id",
-        F.transform("_arr", lambda s: s["_tok"]).alias("_toks"),
-    )
-    inter_cnt = F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
-    verified = (
-        cand.join(
-            arrs.select(
-                F.col("_id").alias("id_a"), F.col("_toks").alias("_ta")
-            ),
-            on="id_a",
-        )
-        .join(
-            arrs.select(
-                F.col("_id").alias("id_b"), F.col("_toks").alias("_tb")
-            ),
-            on="id_b",
-        )
-        .withColumn("_inter", inter_cnt)
+    # candidates sparse).
+    verified = _per_side(
+        cand, (a, b), (al, ar), F.col("_toks"), ("_ta", "_tb")
+    ).withColumn(
+        "_inter", F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
     )
     jac = F.col("_inter").cast("double") / (
         F.col("_na") + F.col("_nb") - F.col("_inter")
     ).cast("double")
     return (
-        verified.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        verified.select(a, b, F.round(jac, 6).alias("jaccard"))
         .filter(jac >= F.lit(threshold))
     )
 
@@ -2176,12 +2142,19 @@ def lsh_quality_report(
         max_band_width=max_band_width,
         hash_family=hash_family,
     ).select("id_a", "id_b")
-    e = _cut_lineage(exact)
-    a = _cut_lineage(approx)
+    return _agreement_report(exact, approx, "lsh_pairs")
+
+
+def _agreement_report(
+    exact: DataFrame, approx: DataFrame, approx_name: str
+) -> DataFrame:
+    """ONE row (exact_pairs, <approx_name>, true_positive, precision,
+    recall) of an approximate (id_a, id_b) pair set against the exact
+    one; NULL rates when a denominator is zero."""
+    e, a = _cut_lineage(exact), _cut_lineage(approx)
     tp = e.join(a, on=["id_a", "id_b"]).count()
     n_e, n_a = e.count(), a.count()
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return exact.sparkSession.createDataFrame(
         [
             (
                 n_e,
@@ -2191,7 +2164,7 @@ def lsh_quality_report(
                 round(tp / n_e, 6) if n_e else None,
             )
         ],
-        "exact_pairs long, lsh_pairs long, true_positive long, "
+        f"exact_pairs long, {approx_name} long, true_positive long, "
         "precision double, recall double",
     )
 
@@ -2229,48 +2202,73 @@ def token_cosine_pairs(
 
     Output: ``(id_a < id_b, cosine ≥ τ)`` rounded to 6.
     """
+    return _token_cosine_pairs(
+        df, text_col=text_col, id_col=id_col, threshold=threshold,
+        max_token_df=max_token_df, binary=binary,
+    )
+
+
+def _token_cosine_pairs(
+    df: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    text_col: str,
+    id_col: str,
+    threshold: float,
+    max_token_df: int | None,
+    binary: bool,
+) -> DataFrame:
+    """Term-vector cosine pair core: dot products from a token-keyed
+    join of sparse (doc, token, count) matrices, exact integer math
+    until the final division."""
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    counts = (
-        spread(df)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
+
+    def _counts(d: DataFrame) -> DataFrame:
+        return (
+            spread(d)
+            .select(
+                F.col(id_col).alias("_id"),
+                F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
+            )
+            .filter(F.col("_tok") != "")
+            .groupBy("_id", "_tok")
+            .agg(
+                (
+                    F.lit(1).cast("long") if binary else F.count(F.lit(1))
+                ).alias("_c")
+            )
         )
-        .filter(F.col("_tok") != "")
-        .groupBy("_id", "_tok")
-        .agg(
-            (
-                F.lit(1).cast("long")
-                if binary
-                else F.count(F.lit(1))
-            ).alias("_c")
+
+    cl = _counts(df)
+    cr = None if right is None else _counts(right)
+    if max_token_df is not None and cr is None:
+        cl = _drop_hot_buckets(cl, max_token_df, keys=("_tok",))
+    elif max_token_df is not None:
+        # doc frequency over BOTH sides (the hazard grows with the
+        # corpus); a hot token drops from each side
+        hot = F.broadcast(
+            _hot_buckets(cl.unionByName(cr), max_token_df, ("_tok",))
         )
-    )
-    if max_token_df is not None:
-        counts = _drop_hot_buckets(counts, max_token_df, keys=("_tok",))
-    norms = counts.groupBy("_id").agg(
-        F.sqrt(F.sum(F.col("_c") * F.col("_c")).cast("double")).alias("_n")
-    )
+        cl = cl.join(hot, ["_tok"], "left_anti")
+        cr = cr.join(hot, ["_tok"], "left_anti")
+
+    def _norms(c: DataFrame) -> DataFrame:
+        return c.groupBy("_id").agg(
+            F.sqrt(F.sum(F.col("_c") * F.col("_c")).cast("double")).alias("_n")
+        )
+
+    a, b = _pair_names(right)
     dots = (
-        counts.alias("a")
-        .join(
-            counts.alias("b"),
-            on=[
-                F.col("a._tok") == F.col("b._tok"),
-                F.col("a._id") < F.col("b._id"),
-            ],
-        )
-        .groupBy(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
-        .agg(F.sum(F.col("a._c") * F.col("b._c")).alias("_dot"))
+        _bucket_join(cl, cr, ("_tok",))
+        .groupBy(F.col("x._id").alias(a), F.col("y._id").alias(b))
+        .agg(F.sum(F.col("x._c") * F.col("y._c")).alias("_dot"))
     )
+    sides = _sides(_norms, cl, cr)
     cos = F.col("_dot").cast("double") / (F.col("_na") * F.col("_nb"))
     return (
-        dots.join(norms.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na")), "id_a")
-        .join(norms.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb")), "id_b")
-        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
+        _per_side(dots, (a, b), sides, F.col("_n"), ("_na", "_nb"))
+        .select(a, b, F.round(cos, 6).alias("cosine"))
         .filter(cos >= F.lit(threshold))
     )
 
@@ -2307,22 +2305,7 @@ def simhash_quality_report(
         max_chunk_width=max_chunk_width,
         hash_family=hash_family,
     ).select("id_a", "id_b")
-    e, a = _cut_lineage(exact), _cut_lineage(approx)
-    tp = e.join(a, on=["id_a", "id_b"]).count()
-    n_e, n_a = e.count(), a.count()
-    return df.sparkSession.createDataFrame(
-        [
-            (
-                n_e,
-                n_a,
-                tp,
-                round(tp / n_a, 6) if n_a else None,
-                round(tp / n_e, 6) if n_e else None,
-            )
-        ],
-        "exact_pairs long, simhash_pairs long, true_positive long, "
-        "precision double, recall double",
-    )
+    return _agreement_report(exact, approx, "simhash_pairs")
 
 
 # ------------------------------------------------ persisted simhash index
@@ -2333,7 +2316,7 @@ class SimhashIndex:
     k longs for minhash): the cheapest durable near-dup index this
     engine offers, the right one when the corpus is fingerprinted by
     simhash anyway.  Same banding tail as the recompute operator
-    (`_cross_hamming_pairs`), so gate decisions are identical by
+    (`_hamming_pairs`), so gate decisions are identical by
     construction."""
 
     def __init__(
@@ -2348,14 +2331,7 @@ class SimhashIndex:
         self.text_col = text_col
 
     def _sigs(self, corpus: DataFrame) -> DataFrame:
-        return (
-            spread(corpus)
-            .select(
-                F.col(self.id_col).alias("_id"),
-                _token_hashes(F.col(self.text_col)).alias("_th"),
-            )
-            .select("_id", _simhash_from_hashes(F.col("_th")).alias("_sh"))
-        )
+        return _simhash_sigs(corpus, text_col=self.text_col, id_col=self.id_col)
 
     @classmethod
     def build(
@@ -2378,12 +2354,9 @@ class SimhashIndex:
         max_chunk_width: int | None = None,
         checkpoint_dir: str | None = None,
     ) -> DataFrame:
-        sig_new = _cut_lineage(self._sigs(new), checkpoint_dir)
-        return _cross_hamming_pairs(
-            sig_new,
-            self.signatures,
-            max_hamming=max_hamming,
-            max_chunk_width=max_chunk_width,
+        return _hamming_pairs(
+            _cut_lineage(self._sigs(new), checkpoint_dir), self.signatures,
+            max_hamming=max_hamming, max_chunk_width=max_chunk_width,
         )
 
     def admit(
@@ -2451,97 +2424,15 @@ def prefix_jaccard_pairs_against(
 ) -> DataFrame:
     """EXACT incremental similarity gate: every (new, existing) pair
     with token-set Jaccard ≥ τ — the admission gate with NO recall
-    loss, for the batches where a missed near-dup is unacceptable
-    (the approximate twins are :func:`minhash_lsh_pairs_against` /
+    loss (the approximate twins are :func:`minhash_lsh_pairs_against` /
     :func:`simhash_pairs_against`; the self-join form is
-    :func:`prefix_jaccard_pairs`).
-
-    Prefix lemma requirement: BOTH sides must sort their tokens by
-    the SAME global order — document frequencies are computed over
-    the UNION of the two corpora (at 100 TB, persist the existing
-    side's frequency table and merge the batch's counts into the
-    ordering instead of recounting).  Candidates join new-prefix ×
-    existing-prefix on the token; verification intersects the two
-    full token arrays.  Output: (new_id, existing_id, jaccard ≥ τ).
+    :func:`prefix_jaccard_pairs`).  Both sides rank tokens by document
+    frequency over the UNION of the two corpora, as the prefix lemma
+    requires.  Output: (new_id, existing_id, jaccard ≥ τ).
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-
-    def _tok(df: DataFrame) -> DataFrame:
-        elems = (
-            F.array_distinct(tokens(F.lower(F.col(text_col))))
-            if shingle <= 1
-            else token_ngrams(F.col(text_col), shingle)
-        )
-        return (
-            spread(df)
-            .select(F.col(id_col).alias("_id"), F.explode(elems).alias("_tok"))
-            .filter(F.col("_tok") != "")
-        )
-
-    tn, te = _tok(new), _tok(existing)
-    freq = (
-        tn.unionByName(te).groupBy("_tok").agg(F.count(F.lit(1)).alias("_df"))
-    )
-
-    def _prefix(tok: DataFrame):
-        per_doc = tok.join(freq, on="_tok").groupBy("_id").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_df"), F.col("_tok")))
-            ).alias("_arr"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        p = F.col("_n") - F.ceil(
-            F.col("_n") * F.lit(threshold) - F.lit(1e-9)
-        ).cast("int") + F.lit(1)
-        prefix = per_doc.select(
-            "_id",
-            "_n",
-            F.explode(
-                F.transform(F.slice("_arr", 1, p), lambda s: s["_tok"])
-            ).alias("_tok"),
-        )
-        arrs = per_doc.select(
-            "_id", F.transform("_arr", lambda s: s["_tok"]).alias("_toks")
-        )
-        return prefix, arrs
-
-    pn, an = _prefix(tn)
-    pe, ae = _prefix(te)
-    cand = (
-        pn.alias("x")
-        .join(pe.alias("y"), on=[F.col("x._tok") == F.col("y._tok")])
-        .select(
-            F.col("x._id").alias("new_id"),
-            F.col("x._n").alias("_na"),
-            F.col("y._id").alias("existing_id"),
-            F.col("y._n").alias("_nb"),
-        )
-        .distinct()
-    )
-    verified = (
-        cand.join(
-            an.select(F.col("_id").alias("new_id"), F.col("_toks").alias("_ta")),
-            on="new_id",
-        )
-        .join(
-            ae.select(
-                F.col("_id").alias("existing_id"), F.col("_toks").alias("_tb")
-            ),
-            on="existing_id",
-        )
-        .withColumn(
-            "_inter", F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
-        )
-    )
-    jac = F.col("_inter").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_inter")
-    ).cast("double")
-    return (
-        verified.select(
-            "new_id", "existing_id", F.round(jac, 6).alias("jaccard")
-        )
-        .filter(jac >= F.lit(threshold))
+    return _prefix_jaccard_pairs(
+        new, existing, text_col=text_col, id_col=id_col, threshold=threshold,
+        shingle=shingle,
     )
 
 
@@ -2558,72 +2449,13 @@ def token_cosine_pairs_against(
     """EXACT incremental term-vector cosine gate: every (new, existing)
     pair with cosine ≥ τ — the bag-of-words twin of
     :func:`prefix_jaccard_pairs_against`, and the exact ground truth
-    for an incremental simhash gate.  Dot products come from a
-    token-keyed join of the two sparse count matrices (only pairs
-    sharing a token materialize; the corpus never self-joins);
-    ``max_token_df`` caps stop-token classes on the EXISTING side's
-    frequency (measured over both sides — the hazard grows with
-    corpus size), trading exactness exactly as documented on
-    :func:`token_cosine_pairs`.  Output: (new_id, existing_id,
-    cosine ≥ τ)."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-
-    def _counts(df: DataFrame) -> DataFrame:
-        return (
-            spread(df)
-            .select(
-                F.col(id_col).alias("_id"),
-                F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
-            )
-            .filter(F.col("_tok") != "")
-            .groupBy("_id", "_tok")
-            .agg(
-                (
-                    F.lit(1).cast("long") if binary else F.count(F.lit(1))
-                ).alias("_c")
-            )
-        )
-
-    cn, ce = _counts(new), _counts(existing)
-    if max_token_df is not None:
-        hot = (
-            cn.unionByName(ce)
-            .groupBy("_tok")
-            .agg(F.count(F.lit(1)).alias("_w"))
-            .filter(F.col("_w") > max_token_df)
-            .select("_tok")
-        )
-        cn = cn.join(F.broadcast(hot), "_tok", "left_anti")
-        ce = ce.join(F.broadcast(hot), "_tok", "left_anti")
-
-    def _norms(c: DataFrame) -> DataFrame:
-        return c.groupBy("_id").agg(
-            F.sqrt(F.sum(F.col("_c") * F.col("_c")).cast("double")).alias("_n")
-        )
-
-    dots = (
-        cn.alias("a")
-        .join(ce.alias("b"), on=[F.col("a._tok") == F.col("b._tok")])
-        .groupBy(
-            F.col("a._id").alias("new_id"), F.col("b._id").alias("existing_id")
-        )
-        .agg(F.sum(F.col("a._c") * F.col("b._c")).alias("_dot"))
-    )
-    cos = F.col("_dot").cast("double") / (F.col("_na") * F.col("_nb"))
-    return (
-        dots.join(
-            _norms(cn).select(F.col("_id").alias("new_id"), F.col("_n").alias("_na")),
-            "new_id",
-        )
-        .join(
-            _norms(ce).select(
-                F.col("_id").alias("existing_id"), F.col("_n").alias("_nb")
-            ),
-            "existing_id",
-        )
-        .select("new_id", "existing_id", F.round(cos, 6).alias("cosine"))
-        .filter(cos >= F.lit(threshold))
+    for an incremental simhash gate.  ``max_token_df`` measures token
+    frequency over both sides and drops hot tokens from each, trading
+    exactness as documented on :func:`token_cosine_pairs`.
+    Output: (new_id, existing_id, cosine ≥ τ)."""
+    return _token_cosine_pairs(
+        new, existing, text_col=text_col, id_col=id_col, threshold=threshold,
+        max_token_df=max_token_df, binary=binary,
     )
 
 
@@ -2644,68 +2476,15 @@ def winnowing_containment_against(
     containment) for new docs sharing ≥ ``min_shared`` winnowed
     fingerprints with an existing-corpus doc — catches the crawl page
     QUOTING 30% of an already-admitted document, which every
-    Jaccard/cosine gate scores low.  Cross form of
-    :func:`winnowing_containment_pairs`: the fingerprint join is
-    new × existing (the corpus never self-pairs; its fingerprint
-    table is what you persist), with the hot-fingerprint cap on the
-    EXISTING side (the licence-header hazard grows with the corpus).
-    ``hash_family="md5"`` makes the gate DuckDB-replicable (same rule
-    as the self-join twin).
+    Jaccard/cosine gate scores low.  Probe form of
+    :func:`winnowing_containment_pairs`, with the hot-fingerprint cap
+    on the EXISTING side; ``hash_family="md5"`` makes it
+    DuckDB-replicable.
     """
-    from sample_dms_s3_kinesis_spark.operators.text import (
-        winnowed_fingerprints,
-    )
-
-    def _fps(df: DataFrame) -> DataFrame:
-        return _cut_lineage(
-            spread(df).select(
-                F.col(id_col).alias("_id"),
-                winnowed_fingerprints(
-                    F.col(text_col),
-                    shingle=shingle,
-                    window=window,
-                    hash_family=hash_family,
-                ).alias("_fps"),
-            ),
-            checkpoint_dir,
-        )
-
-    fn, fe = _fps(new), _fps(existing)
-    sn = fn.select("_id", F.size("_fps").alias("_nf"))
-    se = fe.select("_id", F.size("_fps").alias("_nf"))
-    xn = fn.select("_id", F.explode("_fps").alias("_fp"))
-    xe = fe.select("_id", F.explode("_fps").alias("_fp"))
-    if max_fp_width is not None:
-        xe = _drop_hot_buckets(xe, max_fp_width, keys=("_fp",))
-    pairs = (
-        xn.alias("x")
-        .join(xe.alias("y"), on=[F.col("x._fp") == F.col("y._fp")])
-        .groupBy(
-            F.col("x._id").alias("new_id"),
-            F.col("y._id").alias("existing_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    return (
-        pairs.join(
-            sn.select(F.col("_id").alias("new_id"), F.col("_nf").alias("_na")),
-            "new_id",
-        )
-        .join(
-            se.select(
-                F.col("_id").alias("existing_id"), F.col("_nf").alias("_nb")
-            ),
-            "existing_id",
-        )
-        .select(
-            "new_id",
-            "existing_id",
-            "shared",
-            F.round(
-                F.col("shared") / F.least(F.col("_na"), F.col("_nb")), 6
-            ).alias("containment"),
-        )
+    return _winnowing_pairs(
+        new, existing, text_col=text_col, id_col=id_col, shingle=shingle,
+        window=window, min_shared=min_shared, max_fp_width=max_fp_width,
+        checkpoint_dir=checkpoint_dir, hash_family=hash_family,
     )
 
 
@@ -2717,8 +2496,6 @@ def edit_distance_pairs(
     k: int = 2,
     q: int = 3,
     prefix_len: int | None = None,
-    broadcast_rows: int = BROADCAST_ROWS,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Exact edit-distance similarity join: all pairs with
     ``levenshtein(key_a, key_b) <= k`` where the key is the (optionally
@@ -2744,102 +2521,117 @@ def edit_distance_pairs(
 
     Output: (id_a, id_b, distance), id_a < id_b, distance ≤ k.
     """
-    key = F.col(text_col)
-    if prefix_len is not None:
-        key = F.substring(key, 1, prefix_len)
-    base = spread(df).select(
-        F.col(id_col).alias("_id"), key.alias("_k"), F.length(key).alias("_l")
+    return _edit_distance_pairs(
+        df, text_col=text_col, id_col=id_col, k=k, q=q, prefix_len=prefix_len,
     )
-    n_grams = F.greatest(F.col("_l") - (q - 1), F.lit(0))
-    base = base.withColumn("_ng", n_grams)
+
+
+def _edit_distance_pairs(
+    df: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    text_col: str,
+    id_col: str,
+    k: int,
+    q: int,
+    prefix_len: int | None,
+) -> DataFrame:
+    """Edit-distance pair core (plan: see :func:`edit_distance_pairs`).
+    The incremental form names its ids (id_new, id_existing)."""
+    a, b = ("id_a", "id_b") if right is None else ("id_new", "id_existing")
     min_grams = k * q  # count filter powerless at or below this
 
-    long_side = base.filter(F.col("_ng") > min_grams)
-    grams = long_side.select(
-        "_id",
-        "_l",
-        "_ng",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("_ng") - 1),
-                lambda i: F.col("_k").substr(i + 1, F.lit(q)),
-            )
-        ).alias("_pos", "_g"),
-    )
-    occ_w = Window.partitionBy("_id", "_g").orderBy("_pos")
-    grams = grams.withColumn("_occ", F.row_number().over(occ_w))
-    a = grams.select(
-        F.col("_id").alias("id_a"), F.col("_l").alias("_la"),
-        F.col("_ng").alias("_nga"), "_g", "_occ",
-    )
-    b = grams.select(
-        F.col("_id").alias("id_b"), F.col("_l").alias("_lb"),
-        F.col("_ng").alias("_ngb"), "_g", "_occ",
-    )
-    shared = (
-        a.join(b, on=["_g", "_occ"])
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.abs(F.col("_la") - F.col("_lb")) <= k)
+    def _prep(d: DataFrame) -> tuple[DataFrame, ...]:
+        key = F.col(text_col)
+        if prefix_len is not None:
+            key = F.substring(key, 1, prefix_len)
+        base = spread(d).select(
+            F.col(id_col).alias("_id"), key.alias("_k"), F.length(key).alias("_l")
+        ).withColumn("_ng", F.greatest(F.col("_l") - (q - 1), F.lit(0)))
+        long_side = base.filter(F.col("_ng") > min_grams)
+        grams = long_side.select(
+            "_id",
+            "_l",
+            "_ng",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.col("_ng") - 1),
+                    lambda i: F.col("_k").substr(i + 1, F.lit(q)),
+                )
+            ).alias("_pos", "_g"),
         )
-        .groupBy("id_a", "id_b", "_nga", "_ngb")
+        occ_w = Window.partitionBy("_id", "_g").orderBy("_pos")
+        grams = grams.withColumn("_occ", F.row_number().over(occ_w))
+        return base, long_side, base.filter(F.col("_ng") <= min_grams), grams
+
+    (bl, ll, sl, gl), (br, _, sr, gr) = _sides(_prep, df, right)
+
+    def _ordered(pairs: DataFrame) -> DataFrame:
+        # the self-join emits each unordered pair once
+        return pairs.filter(F.col(a) < F.col(b)) if right is None else pairs
+
+    def _within_k(pairs: DataFrame) -> DataFrame:
+        return pairs.select(
+            a, b, F.levenshtein("_ka", "_kb").alias("distance")
+        ).filter(F.col("distance") <= k)
+
+    shared = (
+        _ordered(
+            gl.select(
+                F.col("_id").alias(a), F.col("_l").alias("_la"),
+                F.col("_ng").alias("_nga"), "_g", "_occ",
+            ).join(
+                gr.select(
+                    F.col("_id").alias(b), F.col("_l").alias("_lb"),
+                    F.col("_ng").alias("_ngb"), "_g", "_occ",
+                ),
+                on=["_g", "_occ"],
+            )
+        )
+        .filter(F.abs(F.col("_la") - F.col("_lb")) <= k)
+        .groupBy(a, b, "_nga", "_ngb")
         .agg(F.count(F.lit(1)).alias("_c"))
         .filter(
             F.col("_c") >= F.greatest("_nga", "_ngb") - F.lit(min_grams)
         )
-        .select("id_a", "id_b")
+        .select(a, b)
     )
-    keys = base.select("_id", "_k")
-    cand = (
-        shared.join(keys.withColumnRenamed("_id", "id_a").withColumnRenamed("_k", "_ka"), on="id_a")
-        .join(keys.withColumnRenamed("_id", "id_b").withColumnRenamed("_k", "_kb"), on="id_b")
+    long_pairs = _within_k(
+        _per_side(shared, (a, b), (bl, br), F.col("_k"), ("_ka", "_kb"))
     )
-    long_pairs = cand.select(
-        "id_a", "id_b", F.levenshtein("_ka", "_kb").alias("distance")
-    ).filter(F.col("distance") <= k)
 
     # Short strings: too few grams for the count bound.  The short ROW
     # set is corpus-sized (every doc shorter than ~q(k+1) chars lands
     # here); only the distinct LENGTH space is bounded (< k·q + q).
-    # So the pass must be an equi hash join, never a theta-only
-    # broadcast-nested-loop: each short row explodes to its 2k+1
+    # So each pass must be an equi hash join, never a theta-only
+    # broadcast-nested-loop: a short row explodes to its 2k+1
     # admissible partner lengths (len−k..len+k) and equi-joins that
     # band against the partner side's exact length — |Δlen| ≤ k as a
-    # hash key, with only the id-order tiebreak as residual.
-    shorts = base.filter(F.col("_ng") <= min_grams)
-    sa = shorts.select(
-        F.col("_id").alias("id_a"), F.col("_k").alias("_ka"),
-        F.explode(
-            F.sequence(F.col("_l") - k, F.col("_l") + k)
-        ).alias("_lband"),
-    )
-    ob = base.select(
-        F.col("_id").alias("id_b"), F.col("_k").alias("_kb"),
-        F.col("_l").alias("_lband"),
-    )
-    short_pairs = (
-        sa.join(ob, on="_lband")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.levenshtein("_ka", "_kb").alias("distance"))
-        .filter(F.col("distance") <= k)
-    )
-    # a short id_b paired with a long id_a (id order) is missed above:
-    sb = shorts.select(
-        F.col("_id").alias("id_b"), F.col("_k").alias("_kb"),
-        F.explode(
-            F.sequence(F.col("_l") - k, F.col("_l") + k)
-        ).alias("_lband"),
-    )
-    oa = long_side.select(
-        F.col("_id").alias("id_a"), F.col("_k").alias("_ka"),
-        F.col("_l").alias("_lband"),
-    )
-    short_pairs2 = (
-        oa.join(sb, on="_lband")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.levenshtein("_ka", "_kb").alias("distance"))
-        .filter(F.col("distance") <= k)
-    )
+    # hash key.  Pass 1: left shorts × every right row; pass 2: left
+    # longs × right shorts, banding the shorts in the self-join and the
+    # NEW batch in the probe, so the corpus side is never multiplied.
+    def _banded(side: DataFrame, i: str, key: str) -> DataFrame:
+        return side.select(
+            F.col("_id").alias(i), F.col("_k").alias(key),
+            F.explode(
+                F.sequence(F.col("_l") - k, F.col("_l") + k)
+            ).alias("_lband"),
+        )
+
+    def _exact(side: DataFrame, i: str, key: str) -> DataFrame:
+        return side.select(
+            F.col("_id").alias(i), F.col("_k").alias(key),
+            F.col("_l").alias("_lband"),
+        )
+
+    def _short_pass(x: DataFrame, y: DataFrame) -> DataFrame:
+        return _within_k(_ordered(x.join(y, on="_lband")))
+
+    short_pairs = _short_pass(_banded(sl, a, "_ka"), _exact(br, b, "_kb"))
+    if right is None:
+        short_pairs2 = _short_pass(_exact(ll, a, "_ka"), _banded(sr, b, "_kb"))
+    else:
+        short_pairs2 = _short_pass(_banded(ll, a, "_ka"), _exact(sr, b, "_kb"))
     return long_pairs.unionByName(short_pairs).unionByName(short_pairs2).distinct()
 
 
@@ -2855,107 +2647,12 @@ def edit_distance_pairs_against(
 ) -> DataFrame:
     """Incremental twin of :func:`edit_distance_pairs` — the
     string-similarity admission gate: every (new, existing) pair with
-    ``levenshtein ≤ k``, computed with the same lossless q-gram count
-    filter but joining NEW grams against EXISTING grams only, so the
-    existing corpus never self-pairs (completing the {Jaccard, cosine,
-    edit} × {self, incremental} exact-join matrix).  Pairs where
-    either side is too short for the count bound take length-banded
-    side passes — equi HASH joins on an exploded length band, since
-    the short row sets are corpus-sized (only the length key space is
-    bounded).
+    ``levenshtein ≤ k``, by the same lossless q-gram count filter and
+    length-banded short passes, joining NEW against EXISTING only.
 
     Output: (id_new, id_existing, distance), distance ≤ k.
     """
-
-    def prep(df: DataFrame, tag: str) -> tuple[DataFrame, DataFrame]:
-        key = F.col(text_col)
-        if prefix_len is not None:
-            key = F.substring(key, 1, prefix_len)
-        base = spread(df).select(
-            F.col(id_col).alias(f"id_{tag}"),
-            key.alias(f"_k{tag}"),
-            F.length(key).alias(f"_l{tag}"),
-        ).withColumn(
-            f"_ng{tag}",
-            F.greatest(F.col(f"_l{tag}") - (q - 1), F.lit(0)),
-        )
-        long_side = base.filter(F.col(f"_ng{tag}") > k * q)
-        grams = long_side.select(
-            f"id_{tag}",
-            f"_l{tag}",
-            f"_ng{tag}",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col(f"_ng{tag}") - 1),
-                    lambda i: F.col(f"_k{tag}").substr(i + 1, F.lit(q)),
-                )
-            ).alias("_pos", "_g"),
-        )
-        occ_w = Window.partitionBy(f"id_{tag}", "_g").orderBy("_pos")
-        grams = grams.withColumn("_occ", F.row_number().over(occ_w)).drop(
-            "_pos"
-        )
-        return base, grams
-
-    nb, ng = prep(new, "new")
-    eb, eg = prep(existing, "existing")
-    min_grams = k * q
-    shared = (
-        ng.join(eg, on=["_g", "_occ"])
-        .filter(F.abs(F.col("_lnew") - F.col("_lexisting")) <= k)
-        .groupBy("id_new", "id_existing", "_ngnew", "_ngexisting")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(
-            F.col("_c")
-            >= F.greatest("_ngnew", "_ngexisting") - F.lit(min_grams)
-        )
-        .select("id_new", "id_existing")
-    )
-    cand = shared.join(
-        nb.select("id_new", "_knew"), on="id_new"
-    ).join(eb.select("id_existing", "_kexisting"), on="id_existing")
-    long_pairs = cand.select(
-        "id_new",
-        "id_existing",
-        F.levenshtein("_knew", "_kexisting").alias("distance"),
-    ).filter(F.col("distance") <= k)
-
-    def banded(a: DataFrame, b: DataFrame) -> DataFrame:
-        # Same contract as the self-join short pass: the short side is
-        # corpus-sized, so explode its 2k+1 admissible partner lengths
-        # into an equi hash key instead of a nested-loop |Δlen| theta.
-        a = a.select(
-            "id_new", "_knew",
-            F.explode(
-                F.sequence(F.col("_lnew") - k, F.col("_lnew") + k)
-            ).alias("_lband"),
-        )
-        b = b.select(
-            "id_existing", "_kexisting",
-            F.col("_lexisting").alias("_lband"),
-        )
-        return (
-            a.join(b, on="_lband")
-            .select(
-                "id_new",
-                "id_existing",
-                F.levenshtein("_knew", "_kexisting").alias("distance"),
-            )
-            .filter(F.col("distance") <= k)
-        )
-
-    new_short = nb.filter(F.col("_ngnew") <= min_grams).select(
-        "id_new", "_knew", "_lnew"
-    )
-    ex_short = eb.filter(F.col("_ngexisting") <= min_grams).select(
-        "id_existing", "_kexisting", "_lexisting"
-    )
-    ex_all = eb.select("id_existing", "_kexisting", "_lexisting")
-    new_long = nb.filter(F.col("_ngnew") > min_grams).select(
-        "id_new", "_knew", "_lnew"
-    )
-    return (
-        long_pairs.unionByName(banded(new_short, ex_all))
-        .unionByName(banded(new_long, ex_short))
-        .distinct()
+    return _edit_distance_pairs(
+        new, existing, text_col=text_col, id_col=id_col, k=k, q=q,
+        prefix_len=prefix_len,
     )

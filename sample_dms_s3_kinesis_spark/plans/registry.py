@@ -50,16 +50,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def _dec(col, scale: int = 2):
-    """Reference implementation the ``_cents`` audit compares against
-    (no live call sites since the scaled-long migration): the decimal
-    cast whose HALF_UP rounding ``_cents`` must match cent-for-cent.
-    New money queries should use ``_cents``/``_sum_cents`` — per-row
-    decimal arithmetic was the single largest cost in the TPC-H
-    aggregates (q01: 1.22 s of 1.4 s at sf0.1)."""
-    return col.cast(f"decimal(18,{scale})")
-
-
 def _money(col, scale: int = 2):
     """Canonical rendering for an exact decimal aggregate: CAST to
     DOUBLE + ROUND at fixed scale, mirrored by ``ROUND(CAST(x AS
@@ -77,17 +67,17 @@ def _money(col, scale: int = 2):
 
 
 def _cents(col, scale: int = 2):
-    """Exact scaled-long twin of ``_dec``: floor(x·10^scale + 0.5).
+    """Exact scaled-long money: floor(x·10^scale + 0.5).
 
     Money doubles in the testdata are exact 2-decimal values
     (``np.round(x, 2)`` in tools/gen_testdata.py), for which this
-    equals ``CAST(x AS DECIMAL(18,2)) * 10^scale`` cent-for-cent
-    (audited: 0 mismatches over every money column of every table at
-    sf0.001/0.01/0.1, negatives included — a 2-decimal double times
-    100 sits within ~1e-9 of an integer, never near the .5 boundary).
-    Long multiply-adds replace per-row BigDecimal arithmetic: the
-    decimal aggregate form of q01 cost 1.22 s at sf0.1 where this
-    form costs 0.44 s, with identical output."""
+    equals ``CAST(x AS DECIMAL(18,2)) * 10^scale`` cent-for-cent — a
+    2-decimal double times 100 sits within ~1e-9 of an integer, never
+    near the .5 boundary.  tests/test_money_contract.py pins that
+    contract on every money column.  Long multiply-adds replace
+    per-row BigDecimal arithmetic: the decimal aggregate form of q01
+    cost 1.22 s at sf0.1 where this form costs 0.44 s, with identical
+    output."""
     return F.floor(col * (10 ** scale) + F.lit(0.5))
 
 
@@ -100,7 +90,7 @@ def _sum_cents(cents_col, scale: int = 2):
     i.e. well inside 100 TB territory.  The divide-back is an exact
     decimal quotient (the true scale of the sum/10^scale is ≤ 4, below
     the division result's scale 6), so ``_money(_sum_cents(c))``
-    renders the identical double to ``_money(F.sum(_dec(x)))``."""
+    renders the identical double to ``_money`` of the decimal SUM."""
     return F.sum(cents_col.cast("decimal(38,0)")) / (10 ** scale)
 
 

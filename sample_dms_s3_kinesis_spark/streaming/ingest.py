@@ -11,7 +11,7 @@ into the corpus only if it is
 2. exact-novel vs the existing corpus (digest anti-join — the corpus
    ships 16-byte digests, never bodies), and
 3. optionally near-novel vs the corpus (banded minhash via the same
-   `_cross_pairs_from_signatures` tail as `operators.dedup`'s gates;
+   `_minhash_pairs` core as `operators.dedup`'s gates;
    the corpus side never self-joins and is served from PERSISTED
    per-batch signatures, so each micro-batch pays shingle+minhash for
    its own novel docs only — batches written without signatures fall
@@ -42,13 +42,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sample_dms_s3_kinesis_spark.operators.dedup import (
-    _cross_pairs_from_signatures,
     _cut_lineage,
-    _gram_hashes,
-    _minhash_sig_frame,
-    token_ngrams,
+    _minhash_pairs,
+    _minhash_sigs,
 )
-from sample_dms_s3_kinesis_spark.operators.partitioning import spread
 from sample_dms_s3_kinesis_spark.tasks import (
     ReplicationTask,
     TaskStatus,
@@ -508,15 +505,11 @@ class CorpusIngestTask(ReplicationTask):
                 )
 
     def _sig_frame(self, docs: DataFrame) -> DataFrame:
-        # vectorized scan path (see dedup._minhash_sig_frame) — same
-        # signatures as the former minhash_signature expression form,
-        # so persisted stores written by either are interchangeable
-        return _minhash_sig_frame(
-            spread(docs).select(
-                F.col("doc_id").alias("_id"),
-                _gram_hashes(token_ngrams(F.col("text"))).alias("_gh"),
-            ),
-            num_hashes=self.num_hashes,
+        # the dedup operators' signature builder — same signatures as
+        # the former minhash_signature expression form, so persisted
+        # stores written by either are interchangeable
+        return _minhash_sigs(
+            docs, text_col="text", id_col="doc_id", num_hashes=self.num_hashes
         )
 
     def _derived_store(
@@ -2122,7 +2115,7 @@ class CorpusIngestTask(ReplicationTask):
         if self.near_dup:
             sig_new = _cut_lineage(self._sig_frame(novel))
             matched = (
-                _cross_pairs_from_signatures(
+                _minhash_pairs(
                     sig_new,
                     self.signatures(before=batch_id),
                     num_hashes=self.num_hashes,

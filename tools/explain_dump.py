@@ -6,14 +6,8 @@ Usage: python tools/explain_dump.py <suffix> [query ...]
 
 Writes plans/$SPARK_GRAFT_PLAN_DIR/<query>_<suffix>.txt (default r16).
 The sf dir comes from $SPARK_GRAFT_SF_DIR (default sf0.1 so the plans
-match the bench).
-
-Eager stages (localCheckpoint / driver loops) leave only a
-``Scan ExistingRDD`` in the final plan, so the checkpoint-producing
-subtree would be invisible here.  Operators that eagerly materialize
-register those frames via ``tools.plan_trace`` when
-$SPARK_GRAFT_PLAN_TRACE=1; this tool appends each traced frame's plan
-to the same file so the hot-path evidence is auditable.
+match the bench).  Eager stages (localCheckpoint / driver loops) leave
+only a ``Scan ExistingRDD`` in the final plan.
 """
 
 from __future__ import annotations
@@ -52,23 +46,15 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from sample_dms_s3_kinesis_spark.plans import trace
-
     for name in names:
-        trace.drain()  # discard anything a prior query left behind
         df = REGISTRY[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
-        traced = trace.drain()
         with open(path, "w") as f:
             f.write(plan)
-            for label, tplan in traced:
-                f.write(f"\n\n=== eager stage: {label} ===\n")
-                f.write(tplan)
-        note = f", {len(traced)} eager stage(s)" if traced else ""
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs{note})")
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
     spark.stop()
     return 0
 

@@ -6,9 +6,9 @@ Usage: python tools/qbench.py q01_pricing_summary q03_shipping_priority ...
 Same session config as bench.py (local[$SPARK_GRAFT_CPUS], shuffle
 partitions = cpus, AQE on, UTC) so isolated numbers are comparable to
 the suite; each query is warmed once and then timed N times (default 3,
-min reported).  Per-run job/stage/task counts come from the status
-tracker so a change in job shape (extra localCheckpoint, lost
-broadcast) is visible next to the timing.
+min reported).  The first timed run's job count comes from the status
+tracker, so an extra eager job (a new localCheckpoint or sizing count)
+is visible next to the timing.
 """
 
 from __future__ import annotations
