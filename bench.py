@@ -14,6 +14,7 @@ startup so per-query numbers reflect steady-state execution.
 
 from __future__ import annotations
 
+import functools
 import gc
 import json
 import os
@@ -22,9 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
-
 from sample_dms_s3_kinesis_spark.plans.registry import REGISTRY
+from sample_dms_s3_kinesis_spark.session import session
 
 # Headline set: the scan/join/agg-heavy relational core, the window and
 # as-of/range operators, and one representative per north-star family.
@@ -111,6 +111,39 @@ TIER2 = [
 # This list IS the tier-2 roster of record — BASELINE.md cites
 # len(TIER2) and membership from here, nowhere else.
 
+# Run once before any timing to absorb JVM/codegen/parquet-footer startup
+# cost: one cheap relational query, plus the LSH queries whose wide
+# generated signature expressions dominate first-execution compile time
+# (Janino compile of the k-slot minhash arrays runs 5-10s once).
+WARMUP = (
+    "q06_forecast_revenue",
+    "q_minhash_lsh_pairs",
+    "q_lsh_jaccard_verified",
+    "q_simhash_pairs",
+)
+
+
+def run_query(spark, name: str, sf_dir: str) -> float:
+    """Build and fully execute one registry query through the noop sink;
+    return its wall seconds, then release what it left behind."""
+    fn = REGISTRY[name].fn
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    elapsed = time.perf_counter() - t0
+    # Operators that persist() intermediates (LSH signatures) would
+    # otherwise accumulate cached blocks across queries and distort
+    # later timings; a Python gc pass releases py4j references so
+    # Spark's ContextCleaner can drop finished broadcasts too.
+    spark.catalog.clearCache()
+    gc.collect()
+    # JVM-side full GC too: accumulated old-gen garbage from earlier
+    # queries otherwise lands its collection pauses inside later
+    # measurements (observed: simhash 2x slower late in the suite
+    # than standalone).
+    spark._jvm.System.gc()
+    return elapsed
+
 
 def compute_deltas(here, sf_float, timings, tier2):
     """Per-query delta vs the newest recorded same-sf BENCH_r{N}.json.
@@ -171,7 +204,6 @@ def compute_deltas(here, sf_float, timings, tier2):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_float = float(sf) if sf.replace(".", "").isdigit() else sf
     # Host load at start/end: this machine's wall-clock numbers swing up
@@ -205,54 +237,12 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dms-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # The wide generated classes (k-slot minhash signatures, 64-bit
-        # simhash packers) overflow the default 240 MB JIT code cache;
-        # once full, HotSpot stops compiling and later queries' generated
-        # code runs interpreted (observed 7-10x slowdowns).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .getOrCreate()
-    )
+    spark = session("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(name: str) -> float:
-        fn = REGISTRY[name].fn
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # Operators that persist() intermediates (LSH signatures) would
-        # otherwise accumulate cached blocks across queries and distort
-        # later timings; a Python gc pass releases py4j references so
-        # Spark's ContextCleaner can drop finished broadcasts too.
-        spark.catalog.clearCache()
-        gc.collect()
-        # JVM-side full GC too: accumulated old-gen garbage from earlier
-        # queries otherwise lands its collection pauses inside later
-        # measurements (observed: simhash 2x slower late in the suite
-        # than standalone).
-        spark._jvm.System.gc()
-        return elapsed
-
-    # Warmup: absorb JVM/codegen/parquet-footer startup cost — one cheap
-    # relational query, plus the LSH queries whose wide generated
-    # signature expressions dominate first-execution compile time
-    # (Janino compile of the k-slot minhash arrays runs 5-10s once).
-    run("q06_forecast_revenue")
-    run("q_minhash_lsh_pairs")
-    run("q_lsh_jaccard_verified")
-    run("q_simhash_pairs")
+    run = functools.partial(run_query, spark, sf_dir=sf_dir)
+    for name in WARMUP:
+        run(name)
 
     # Best of two executions per query: first execution of a query still
     # pays its own codegen/JIT, and GC pauses land arbitrarily — the min

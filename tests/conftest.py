@@ -5,12 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from sample_dms_s3_kinesis_spark.catalog import (
     Catalog,
     REFERENCE_TABLE_DEFINITION,
 )
+from sample_dms_s3_kinesis_spark.session import session
 
 # Fixture data — verbatim the reference's sample corpus
 # (/root/reference/lib/query.py:1-27), which is the spec for the golden
@@ -44,17 +43,7 @@ DELETE,employee,hr,101,Smith,Bob,2017-03-13,Dallas"""
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("dms-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    yield session
+    yield session("test")
 
 
 @pytest.fixture(scope="session")

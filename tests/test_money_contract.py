@@ -9,6 +9,7 @@ column of the fixtures, so a data change that breaks it fails here
 instead of as a silent 1-cent drift in the aggregates.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from sample_dms_s3_kinesis_spark.plans.registry import _cents, t
@@ -30,8 +31,9 @@ def _dec(col, scale: int = 2):
     return col.cast(f"decimal(18,{scale})")
 
 
-def test_cents_equals_decimal_cast_on_every_money_column(spark):
-    sf = sf_dir("0.001")
+@pytest.mark.parametrize("scale", ["0.001", "0.01"])
+def test_cents_equals_decimal_cast_on_every_money_column(spark, scale):
+    sf = sf_dir(scale)
     for table, cols in MONEY_COLUMNS.items():
         row = (
             t(spark, sf, table)

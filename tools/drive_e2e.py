@@ -2,17 +2,14 @@ import os, sys, tempfile, time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from sample_dms_s3_kinesis_spark.catalog import Catalog, REFERENCE_TABLE_DEFINITION
 from sample_dms_s3_kinesis_spark.tasks import FullLoadTask
 from sample_dms_s3_kinesis_spark.streaming.cdc_task import CdcTask
 from sample_dms_s3_kinesis_spark.apply import ParquetTargetStore
+from sample_dms_s3_kinesis_spark.session import session
 from sample_dms_s3_kinesis_spark.sinks import MemorySink
 
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false").getOrCreate())
+spark = session("test")
 
 tmp = tempfile.mkdtemp()
 root = os.path.join(tmp, "sourceData")

@@ -105,18 +105,10 @@ def main() -> int:
     ) + "/sf0.001"
     only = set(args[1:])
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from sample_dms_s3_kinesis_spark.session import session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("test")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
